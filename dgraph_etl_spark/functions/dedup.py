@@ -259,8 +259,7 @@ def ordered_pairs(ids: Column) -> Column:
     sorted per-bucket arrays and explodes this expression gets the
     identical pair multiset while consuming the bucket relation ONCE
     (no checkpoint materialization for join reuse, no join, one fewer
-    shuffle). Shared by the LSH/SimHash candidate generators and the
-    c30 source-overlap matrix."""
+    shuffle). bucket_ordered_pairs is that consumer."""
     return F.flatten(
         F.transform(
             ids,
@@ -273,41 +272,57 @@ def ordered_pairs(ids: Column) -> Column:
     )
 
 
+def bucket_ordered_pairs(
+    rows: DataFrame, keys: list[str], item: Column | str
+) -> DataFrame:
+    """Candidate generator, in-row: one row ``p = (_1, _2)`` per
+    ordered pair ``_1 < _2`` of ``item`` values sharing a ``keys``
+    bucket of ``rows`` -- a pair sharing k buckets appears k times, and
+    recall and precision are those of the bucketing. Same pair set as a
+    bucket self-join on ``a.item < b.item`` when an item occurs once
+    per bucket (struct items order by their first field), and as
+    deterministic as the bucket keys: hash-exact oracles hold wherever
+    the keys are portable.
+
+    Each bucket is collected sorted and exploded through ordered_pairs,
+    so ``rows`` is consumed once: one bucket-keyed exchange, no join,
+    no checkpoint. That is only safe when bucket size is bounded -- a
+    k-row bucket becomes one k-element row and k^2/2 pair structs --
+    so unbounded buckets (2-bit SRP bands, raw n-grams) take the
+    streamed self-join instead (similarity.bucket_pairs)."""
+    buckets = rows.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(item)).alias("items")
+    )
+    return buckets.filter(F.size("items") >= 2).select(
+        F.explode(ordered_pairs(F.col("items"))).alias("p")
+    )
+
+
 def lsh_candidate_pairs(
     docs: DataFrame,
     num_hashes: int = NUM_HASHES,
     num_bands: int = NUM_BANDS,
     portable: bool = False,
 ) -> DataFrame:
-    """C2: LSH banding -> candidate duplicate pairs. Documents agreeing
-    on ALL hashes of any band collide in that band's bucket; the
-    quadratic step is bucket-local by construction -- no global
-    all-pairs step.
+    """C2: MinHash LSH candidate duplicate pairs: each distinct
+    ``(doc_a, doc_b)``, ``doc_a < doc_b``, agreeing on all hashes of at
+    least one band. Candidates, not verified pairs: a pair with
+    Jaccard s is found with probability 1 - (1 - s^rows_per_band)^
+    num_bands, and nothing filters out low-Jaccard collisions.
+    Rows-only oracle by default; hash-exact with ``portable=True``.
 
-    r12 shape: per-bucket sorted doc-id collect + in-row ordered-pair
-    explode (ordered_pairs) instead of the band-table self-join. The
-    pair set is identical (sort_array ascending ==
-    ``a.doc_id < b.doc_id``; band rows are unique per (doc, band), so
-    no self-pairs), but the band relation is consumed ONCE in a
-    linear pipeline: the old shape had to localCheckpoint the band
-    table (a full materialization pass) because it fed both self-join
-    sides, then paid the join and its exchanges on top. Now: one
-    bucket-keyed exchange + the pair dedup's -- and the skew bound is
-    unchanged (a hot bucket concentrated in one join task before, one
-    collect task now; soak-measured spread 1.02, hottest key 27 rows).
+    In-row generator (bucket_ordered_pairs): a band bucket needs every
+    hash of the band to agree, so buckets stay small (soak-measured
+    hottest key 27 rows) and the band relation is consumed once, with
+    no checkpoint and no join.
 
     Band bucket key: xxhash64 over the band's hash tuple by default (8
     bytes/row shuffled); ``portable=True`` keys on the ':'-joined
     decimal tuple instead -- a wider key, but one a SQL oracle can
-    rebuild verbatim, which upgrades the query from rows-only to
-    hash-exact certification."""
+    rebuild verbatim."""
     bands = band_table(docs, num_hashes, num_bands, portable)
-    buckets = bands.groupBy("band", "band_hash").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ids")
-    )
     return (
-        buckets.filter(F.size("ids") >= 2)
-        .select(F.explode(ordered_pairs(F.col("ids"))).alias("p"))
+        bucket_ordered_pairs(bands, ["band", "band_hash"], "doc_id")
         .select(F.col("p._1").alias("doc_a"), F.col("p._2").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
@@ -316,25 +331,24 @@ def lsh_candidate_pairs(
 def ngram_jaccard_pairs(
     docs: DataFrame, n: int = 3, block_col: str = "lang", threshold: float = 0.0
 ) -> DataFrame:
-    """n-gram Jaccard similarity on blocked pairs (exact; the oracle
-    reproduces it in SQL). Jaccard = |A∩B| / (|A|+|B|-|A∩B|) computed
-    from exploded shingle sets via a grouped equi-join -- set sizes and
-    intersection counts are exact integers, the final division is one
-    IEEE op.
+    """n-gram Jaccard similarity: each ``(doc_a, doc_b)``, ``doc_a <
+    doc_b``, in the same ``block_col`` block sharing at least one
+    n-gram, with ``n_common`` shared grams and ``jaccard = round(|A∩B| /
+    (|A|+|B|-|A∩B|), 4) >= threshold``. Exact (precision and recall
+    1.0 within blocks): set sizes and intersection counts are integers
+    and the division is one IEEE op, so the oracle is hash-exact.
 
-    Round-12 shape: each doc's set size is ``size(token_ngrams(...))``
-    computed IN-ROW before the explode (token_ngrams is already
-    distinct, so the array length IS the old post-explode
-    count-per-doc), carried on every shingle row, and grouped through
-    the intersection agg -- (doc_a, doc_b) determines (sz_a, sz_b), so
-    the extended grouping key changes nothing. That removes the sizes
-    aggregate (a full shingle-stream shuffle) and both size joins, and
-    leaves ``sh`` with one consumer per self-join side -- the
-    checkpoint shrinks to join-reuse only. The self-join itself stays
-    a streamed equi-join (NOT the in-row ordered_pairs form the LSH
-    lanes use): raw gram buckets are unbounded -- a stopword bigram
-    shared by k docs would flatten k^2 pair structs into ONE row --
-    while LSH band buckets are soak-bounded (hottest key 27 rows)."""
+    Not a client of the cosine candidate -> score pipeline
+    (similarity.bucket_pairs / score_pairs): its score is a grouped
+    intersection count over every shared gram, not a pairwise function
+    of two items, so the gram self-join is aggregated rather than
+    deduplicated and then scored. Each doc's set size is computed
+    in-row before the explode (token_ngrams is distinct) and carried
+    through the grouping key, which (doc_a, doc_b) already determines.
+
+    Streamed self-join, not in-row (dedup.bucket_ordered_pairs): raw
+    gram buckets are unbounded -- a stopword bigram shared by k docs
+    would flatten k^2 pair structs into one row."""
     base = docs.select(
         "doc_id",
         F.col(block_col).alias("blk"),
@@ -636,19 +650,20 @@ def simhash_buckets(docs: DataFrame, portable: bool = False) -> DataFrame:
 def simhash_hamming_pairs(
     docs: DataFrame, r: int = 3, portable: bool = False
 ) -> DataFrame:
-    """Hamming<=r SimHash candidate pairs via pigeonhole banding: split
-    the n_bits signature into r+1 contiguous chunks -- any pair within
-    Hamming distance r differs in at most r chunks, so it agrees
-    EXACTLY on at least one chunk (pigeonhole) and the per-chunk bucket
-    equi-join has recall 1.0.  The exact ``bit_count(a XOR b) <= r``
-    filter then removes false positives, so the output is precisely the
-    Hamming<=r pair set.  Same scale shape as minhash LSH: the
-    quadratic step is confined to (chunk, value) buckets, generated
-    per bucket by the sorted (doc_id, simhash) collect + in-row
-    ordered-pair explode (ordered_pairs; sort_array on the structs
-    orders by doc_id -- ids are unique -- so the pair set equals the
-    old ``a.doc_id < b.doc_id`` self-join's, with the signature
-    pipeline consumed once and no checkpoint materialization)."""
+    """Hamming<=r SimHash pairs: each distinct ``(doc_a, doc_b)``,
+    ``doc_a < doc_b``, whose signatures differ in at most r bits, with
+    that distance as ``hamming``. Precision and recall 1.0: split the
+    n_bits signature into r+1 contiguous chunks -- a pair within
+    Hamming distance r agrees exactly on at least one chunk
+    (pigeonhole), so chunk buckets miss nothing, and the exact
+    ``bit_count(a XOR b) <= r`` filter removes the rest. Hash-exact
+    oracle with ``portable=True``.
+
+    In-row generator (bucket_ordered_pairs over (doc_id, simhash)
+    structs, which sort by doc_id): a chunk is n_bits/(r+1) signature
+    bits that must agree exactly (15 at the registered r=3), so buckets
+    stay small and the signature pipeline is consumed once, with no
+    checkpoint and no join."""
     chunks = r + 1
     n_bits = simhash_bits(portable)
     bounds = [i * n_bits // chunks for i in range(chunks + 1)]
@@ -673,14 +688,10 @@ def simhash_hamming_pairs(
         "simhash",
         F.posexplode(F.array(*chunk_cols)).alias("chunk", "chunk_val"),
     )
-    buckets = bands.groupBy("chunk", "chunk_val").agg(
-        F.sort_array(F.collect_list(F.struct("doc_id", "simhash"))).alias(
-            "ms"
-        )
-    )
     return (
-        buckets.filter(F.size("ms") >= 2)
-        .select(F.explode(ordered_pairs(F.col("ms"))).alias("p"))
+        bucket_ordered_pairs(
+            bands, ["chunk", "chunk_val"], F.struct("doc_id", "simhash")
+        )
         .select(
             F.col("p._1.doc_id").alias("doc_a"),
             F.col("p._2.doc_id").alias("doc_b"),

@@ -214,50 +214,161 @@ def ivf_topk(
     return brute_topk(candidates, query, k, vec_col)
 
 
+def _bucket_join(
+    bands: DataFrame, residual: Column | None = None, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Every ``(vec_a, vec_b, band_val)`` with ``vec_a < vec_b`` per
+    shared ``(band, band_val)`` bucket of ``bands`` that also passes
+    ``residual`` (a predicate over the two sides, aliased ``a`` and
+    ``b``), plus each ``carry`` column of both sides as ``<col>_a`` and
+    ``<col>_b``. A pair sharing k buckets appears k times."""
+    a = bands.alias("a")
+    b = bands.alias("b")
+    on = (F.col("a.band") == F.col("b.band")) & (
+        F.col("a.band_val") == F.col("b.band_val")
+    )
+    if residual is not None:
+        on = on & residual
+    # the id order is a filter, not part of ``on``: the optimizer merges
+    # it with a score threshold pushed down from above, ahead of it, and
+    # conjuncts run left to right -- so the dot product is skipped for
+    # the half of the bucket's pairs the order rejects
+    return a.join(b, on).filter(F.col("a.vec_id") < F.col("b.vec_id")).select(
+        F.col("a.vec_id").alias("vec_a"),
+        F.col("b.vec_id").alias("vec_b"),
+        F.col("a.band_val").alias("band_val"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+
+
+def bucket_pairs(bands: DataFrame, residual: Column | None = None) -> DataFrame:
+    """Candidate stage: each distinct ``(vec_a, vec_b)``, ``vec_a <
+    vec_b``, that shares at least one ``(band, band_val)`` bucket of
+    ``bands`` and passes ``residual``, exactly once. Recall and
+    precision are those of the bucketing: every co-bucketed pair, and
+    nothing else.
+
+    ``bands`` holds one row per (vector, band) -- ``vec_id``, ``band``,
+    ``band_val`` and any column ``residual`` reads, e.g.
+    ``F.col("a.label") != F.col("b.label")``. It feeds both join sides,
+    so it is checkpointed once; keep it to ids and keys (vectors attach
+    afterwards, in score_pairs). A pair found in several bands is
+    deduplicated here as two bare longs, before any scoring. The pair
+    set is deterministic wherever the band values are, so a lane keeps
+    a hash-exact oracle on srp_bands_fixedpoint bands and is rows-only
+    on Gaussian srp_signatures bands.
+
+    Streamed (a bucket-keyed equi-join), not in-row
+    (dedup.bucket_ordered_pairs): SRP band buckets are unbounded -- a
+    2-bit band holds about a quarter of the corpus -- and the in-row
+    form would flatten a k-row bucket's k^2/2 pairs into one row."""
+    return (
+        _bucket_join(bands.localCheckpoint(), residual)
+        .select("vec_a", "vec_b")
+        .distinct()
+    )
+
+
+def _prep(emb: DataFrame, vec_col: str, *keys: Column) -> DataFrame:
+    """Per-vector half of the scoring stage: ``vec_id``, ``keys``, the
+    double-cast vector ``v`` and its L2 norm ``nrm``, once per row."""
+    return emb.select(
+        "vec_id", *keys, as_double_array(vec_col).alias("v")
+    ).withColumn("nrm", l2_norm(F.col("v")))
+
+
+def _score(
+    pairs: DataFrame, cols: list[Column | str], threshold: float | None
+) -> DataFrame:
+    """Per-pair half of the scoring stage: ``cols`` plus ``sim =
+    round(cosine, 4)`` from the pairs' ``v_a``/``v_b`` and
+    ``nrm_a``/``nrm_b``, keeping ``sim >= threshold`` (every row when
+    None)."""
+    sim = F.round(
+        F.try_divide(
+            dot(F.col("v_a"), F.col("v_b")), F.col("nrm_a") * F.col("nrm_b")
+        ),
+        4,
+    )
+    scored = pairs.select(*cols, sim.alias("sim"))
+    return scored if threshold is None else scored.filter(F.col("sim") >= threshold)
+
+
+def score_pairs(
+    pairs: DataFrame,
+    emb: DataFrame,
+    threshold: float | None = None,
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Scoring stage: ``pairs`` (``vec_a``, ``vec_b`` and any extra
+    columns, passed through) plus ``sim = round(cosine(a, b), 4)`` from
+    ``emb``'s vectors, keeping rows with ``sim >= threshold`` (all rows
+    when None). A zero-norm side scores NULL and never passes a
+    threshold.
+
+    The double cast and the L2 norm are computed once per vector of
+    ``emb`` and joined onto the pairs by id; the dot product runs once
+    per pair row. Same expressions and folds as cosine(), so the sims
+    are bit-identical to ``round(cosine(), 4)`` and replayable by a SQL
+    oracle's ``round(list_cosine_similarity(), 4)``."""
+    prep = _prep(emb, vec_col)
+
+    def side(s: str) -> DataFrame:
+        return prep.select(
+            F.col("vec_id").alias(f"vec_{s}"),
+            F.col("v").alias(f"v_{s}"),
+            F.col("nrm").alias(f"nrm_{s}"),
+        )
+
+    joined = pairs.join(side("a"), "vec_a").join(side("b"), "vec_b")
+    return _score(joined, pairs.columns, threshold)
+
+
 def blocked_similarity_join(
     emb: DataFrame, threshold: float, block_col: str = "label"
 ) -> DataFrame:
-    """C5: all pairs with cosine >= threshold, blocked on ``block_col``
-    so the cross product is per-block, not global (LSH buckets play the
-    same role when no natural block key exists). Threshold compares the
-    ROUNDED similarity so the cut is reproducible across engines.
+    """C5: every pair ``vec_a < vec_b`` in the same ``block_col`` block
+    with ``sim = round(cosine, 4) >= threshold``, plus that block as
+    ``blk``. Exact inside blocks (precision and recall 1.0 against a
+    blocked brute force); pairs across blocks are never candidates, so
+    the quadratic step is per block, not global. Deterministic 4dp
+    sims: its registered callers keep hash-exact oracles.
 
-    Per-ROW prep (round 13, guide §2.3 do-less-work-per-task): the
-    double-cast and the L2 norm are computed once per row BEFORE the
-    pair join instead of once per PAIR inside cosine() -- for a block
-    of n vectors that is 2n evaluations instead of n^2, and the
-    surviving per-pair work is the dot product alone. Bit-identical:
-    same expressions (same left-to-right folds), same
-    try_divide(dot, na*nb) contract, just evaluated earlier; measured
-    c05 27.4 -> 5.8 s and c02_embedding_neardup 112 -> 34 s at sf1,
-    rows identical (exceptAll both directions)."""
-    prep = emb.select(
-        "vec_id",
-        F.col(block_col).alias("blk"),
-        as_double_array("embedding").alias("v"),
-    ).withColumn("nrm", l2_norm(F.col("v")))
-    a = prep.select(
-        F.col("vec_id").alias("vec_a"),
-        "blk",
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
+    Each vector sits in exactly one block, so the block self-join meets
+    a pair once and needs no candidate dedupe. The scoring stage's
+    per-vector prep therefore rides the block rows through the join
+    (each vector crosses the exchange once) instead of joining onto the
+    pairs, which would shuffle every candidate pair with its vectors."""
+    rows = _prep(
+        emb, "embedding", F.lit(0).alias("band"), F.col(block_col).alias("band_val")
     )
-    b = prep.select(
-        F.col("vec_id").alias("vec_b"),
-        "blk",
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    pairs = a.join(b, "blk").filter(F.col("vec_a") < F.col("vec_b"))
-    sim = F.round(
-        F.try_divide(dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")),
-        4,
-    )
-    return (
-        pairs.withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-        .select("vec_a", "vec_b", "blk", "sim")
-    )
+    pairs = _bucket_join(rows, carry=("v", "nrm"))
+    return _score(pairs, ["vec_a", "vec_b", F.col("band_val").alias("blk")], threshold)
+
+
+def _srp_layout(
+    emb: DataFrame, n_planes: int, n_bands: int, vec_col: str, dim: int | None
+) -> tuple[int, int]:
+    """``(dim, bits_per_band)`` of an SRP banding. Refuses ``n_planes``
+    not divisible by ``n_bands`` (trailing signature bits would be
+    computed but never banded, silently lowering recall -- the guard of
+    lsh_candidate_pairs). When ``dim`` is None it is read from the
+    first row of ``emb``, which must then be non-empty."""
+    if n_planes % n_bands:
+        raise ValueError(
+            f"n_planes={n_planes} not divisible by n_bands={n_bands}: "
+            "trailing signature bits would be computed but never "
+            "banded, silently lowering recall"
+        )
+    if dim is None:
+        first = emb.select(vec_col).first()
+        if first is None:
+            raise ValueError(
+                "dim=None but the frame is empty: pass dim, the "
+                f"length of {vec_col}"
+            )
+        dim = len(first[0])
+    return dim, n_planes // n_bands
 
 
 def _srp_planes(n_planes: int, dim: int, seed: int):
@@ -291,11 +402,12 @@ def srp_signatures(
 
     Pass ``dim`` explicitly in pipelines (it is schema metadata the
     caller owns); when None it is inferred with one driver single-row
-    lookup, which is fine interactively but a needless job in a DAG.
+    lookup (see _srp_layout), which is fine interactively but a
+    needless job in a DAG. Gaussian planes sum floats, so a SQL engine
+    cannot replay the signature bit for bit: queries built on it are
+    rows-only-checkable.
     """
-    if dim is None:
-        first = emb.select(vec_col).first()
-        dim = len(first[0])
+    dim, _ = _srp_layout(emb, n_planes, 1, vec_col, dim)
     planes = _srp_planes(n_planes, dim, seed)
     planes_df = emb.sparkSession.createDataFrame(
         [([[float(x) for x in row] for row in planes],)],
@@ -359,28 +471,21 @@ def srp_neardup_pairs(
     dim: int | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs via SRP-LSH banding + exact
-    re-rank: band the n_planes signature bits into n_bands chunks,
-    bucket-join per (band, value), then keep candidates whose EXACT
-    cosine clears the threshold. Precision is 1.0 by construction (the
-    final filter is exact); recall is the LSH trade-off (1 - (1 -
-    p^bits_per_band)^n_bands, p = 1 - theta/pi) -- tested empirically
-    on the fixture. The quadratic step is confined to signature
-    buckets: at 100 TB this replaces blocked_similarity_join's natural
-    block key, and the band table feeds both join sides so it is
-    materialized once (localCheckpoint)."""
-    if n_planes % n_bands:
-        raise ValueError(
-            f"n_planes={n_planes} not divisible by n_bands={n_bands}: "
-            "trailing signature bits would be computed but never "
-            "banded, silently lowering recall (lsh_candidate_pairs' "
-            "guard, applied to the SRP family)"
-        )
-    bits_per_band = n_planes // n_bands
+    re-rank: each distinct ``(vec_a, vec_b)``, ``vec_a < vec_b``, that
+    shares a band value of srp_signatures (n_planes bits cut into
+    n_bands bands) and has ``sim = round(cosine, 4) >= threshold``.
+    Precision is 1.0 by construction (the final filter is exact);
+    recall is the LSH trade-off, 1 - (1 - p^bits_per_band)^n_bands with
+    p = 1 - theta/pi. Seeded Gaussian planes make the oracle rows-only;
+    srp_neardup_pairs_portable is the hash-exact twin.
+
+    bucket_pairs turns the id-only band rows into distinct pairs, and
+    score_pairs attaches the vectors and scores each pair once."""
+    dim, bits_per_band = _srp_layout(emb, n_planes, n_bands, vec_col, dim)
     mask = (1 << bits_per_band) - 1
     sig = srp_signatures(emb, n_planes, seed, vec_col, dim=dim)
     bands = sig.select(
         "vec_id",
-        vec_col,
         F.posexplode(
             F.array(
                 *[
@@ -391,38 +496,8 @@ def srp_neardup_pairs(
                 ]
             )
         ).alias("band", "band_val"),
-    ).localCheckpoint()
-    # round 13: double-cast + L2 norm once per band ROW (on top of the
-    # checkpoint), not once per candidate PAIR -- the surviving pair
-    # work is the dot alone (bit-identical, same folds; see
-    # blocked_similarity_join)
-    prep = bands.select(
-        "vec_id", "band", "band_val", as_double_array(vec_col).alias("vd")
-    ).withColumn("nrm", l2_norm(F.col("vd")))
-    a = prep.alias("a")
-    b = prep.alias("b")
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("a.vd"), F.col("b.vd")),
-            F.col("a.nrm") * F.col("b.nrm"),
-        ),
-        4,
     )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            sim.alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
+    return score_pairs(bucket_pairs(bands), emb, threshold, vec_col)
 
 
 def rademacher_planes(n_planes: int, dim: int, tag: str):
@@ -471,16 +546,7 @@ def srp_bands_fixedpoint(
     of srp_signatures, trading a benign BNLJ for plan size). One
     projection + one posexplode: n_bands rows per input row, no
     shuffle, no Python."""
-    if n_planes % n_bands:
-        raise ValueError(
-            f"n_planes={n_planes} not divisible by n_bands={n_bands}: "
-            "trailing signature bits would be computed but never "
-            "banded, silently lowering recall"
-        )
-    if dim is None:
-        first = emb.select(vec_col).first()
-        dim = len(first[0])
-    bits_per_band = n_planes // n_bands
+    dim, bits_per_band = _srp_layout(emb, n_planes, n_bands, vec_col, dim)
     planes = rademacher_planes(n_planes, dim, tag)
     qv = F.transform(
         as_double_array(vec_col), lambda x: F.round(x * scale).cast("long")
@@ -518,18 +584,21 @@ def hard_negatives_srp(
     vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
-    """Hard-negative mining, scale form: candidates come from SRP
-    band buckets (same band + same band_val + different label), then
-    the exact-cosine per-anchor rank picks each anchor's hardest
-    in-bucket negative. The quadratic step is confined to signature
-    buckets -- at 100 TB the bucket join shuffles by (band, band_val)
-    and never cross-joins the corpus; the all-pairs exactness baseline
-    (suites' former c40 body) survives as the recall-floor oracle in
-    tests/test_properties.py. Deterministic end to end (Rademacher
-    planes + integer projections + 4dp-rounded cosine), so the DuckDB
-    oracle reproduces the exact output, not just row counts. Anchors
-    whose buckets hold no cross-label vector drop out -- the measured
-    fixture recall floor is pinned in the tests."""
+    """Hard-negative mining, scale form: for each anchor, the
+    different-label vector with the highest ``sim = round(cosine, 4)``
+    (ties to the lower id) among the vectors sharing one of its
+    srp_bands_fixedpoint buckets. Anchors whose buckets hold no
+    cross-label vector drop out, and an anchor's true hardest negative
+    is missed when it shares no bucket with it; both recall floors are
+    pinned against hard_negatives_exact in tests/test_properties.py.
+    Deterministic end to end (Rademacher planes, integer projections,
+    4dp cosine), so the DuckDB oracle is hash-exact.
+
+    Each unordered cross-label pair is found and scored once, then
+    mirrored so both ends rank it; dot and na*nb are commutative, so
+    the mirrored sim is the one either direction would compute."""
+    from pyspark.sql import Window as Wnd
+
     bands = srp_bands_fixedpoint(
         emb,
         n_planes=n_planes,
@@ -538,46 +607,31 @@ def hard_negatives_srp(
         vec_col=vec_col,
         dim=dim,
         keep=("vec_id", "label"),
-    ).localCheckpoint()
-    # round 13: double-cast + L2 norm once per band ROW, not per pair
-    # (bit-identical; see blocked_similarity_join)
-    prep = bands.select(
-        "vec_id", "label", "band", "band_val",
-        as_double_array(vec_col).alias("vd"),
-    ).withColumn("nrm", l2_norm(F.col("vd")))
-    a = prep.alias("a")
-    b = prep.alias("b")
-    # cosine is computed BEFORE the pair dedup: a pair found by k
-    # bands costs k redundant 64-mult dot products (k <= n_bands,
-    # usually 1), but the dedup then shuffles 3 scalar columns keyed
-    # (anchor, negative) with a map-side partial_max instead of
-    # dragging both embedding arrays through the exchange -- at scale
-    # the shuffle bytes dominate the recompute by orders of magnitude.
-    scored = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.label") != F.col("b.label")),
-        )
-        .select(
-            F.col("a.vec_id").alias("anchor_id"),
-            F.col("b.vec_id").alias("negative_id"),
-            F.round(
-                F.try_divide(
-                    dot(F.col("a.vd"), F.col("b.vd")),
-                    F.col("a.nrm") * F.col("b.nrm"),
-                ),
-                4,
-            ).alias("sim"),
-        )
-        .groupBy("anchor_id", "negative_id")
-        .agg(F.max("sim").alias("sim"))
+    ).select("vec_id", "label", "band", "band_val")
+    pairs = score_pairs(
+        bucket_pairs(bands, F.col("a.label") != F.col("b.label")),
+        emb,
+        vec_col=vec_col,
     )
-    from pyspark.sql import Window as Wnd
+    both = pairs.select(
+        F.inline(
+            F.array(
+                F.struct(
+                    F.col("vec_a").alias("anchor_id"),
+                    F.col("vec_b").alias("negative_id"),
+                    "sim",
+                ),
+                F.struct(
+                    F.col("vec_b").alias("anchor_id"),
+                    F.col("vec_a").alias("negative_id"),
+                    "sim",
+                ),
+            )
+        )
+    )
     w = Wnd.partitionBy("anchor_id").orderBy(F.desc("sim"), F.col("negative_id"))
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
+        both.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") == 1)
         .select("anchor_id", "negative_id", "sim")
     )
@@ -592,15 +646,12 @@ def srp_neardup_pairs_portable(
     vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
-    """srp_neardup_pairs on the DETERMINISTIC Rademacher family
-    (srp_bands_fixedpoint) instead of seeded Gaussian planes: same
-    banding trade-off and the same exact-cosine precision-1.0 filter,
-    but the buckets are bit-identical in any engine with md5 -- so the
-    registered query carries a hash-exact SQL oracle where the
-    Gaussian form could only be rows-only-checked. Same scale shape:
-    bucket-local candidate join, cosine computed pre-dedup so the
-    (vec_a, vec_b) dedup shuffles three scalar columns with a map-side
-    partial_max, never the embedding arrays."""
+    """srp_neardup_pairs on the deterministic Rademacher family
+    (srp_bands_fixedpoint) instead of seeded Gaussian planes: the same
+    pair set definition, precision 1.0 and banding recall trade-off,
+    but the buckets are bit-identical in any engine with md5, so the
+    registered query carries a hash-exact SQL oracle. Same
+    bucket_pairs -> score_pairs pipeline."""
     bands = srp_bands_fixedpoint(
         emb,
         n_planes=n_planes,
@@ -608,64 +659,8 @@ def srp_neardup_pairs_portable(
         tag=tag,
         vec_col=vec_col,
         dim=dim,
-        keep=("vec_id",),
-    ).localCheckpoint()
-    # round 13: c20 at sf1 is the engine's biggest single lane (2-bit
-    # bands keep ~all pairs as candidates: 405M collisions / 179M
-    # distinct pairs, redundancy 2.27x). Two reshapes, both
-    # result-identical:
-    # 1. the candidate pairs are DEDUPED as bare (vec_a, vec_b) longs
-    #    BEFORE any cosine (sim is band-independent, so the old
-    #    groupBy.max(sim) == sim on the distinct pair -- and the
-    #    distinct exchange carries 16-byte rows instead of 24-byte
-    #    scored rows);
-    # 2. the double-cast + L2 norm attach once per VECTOR via two
-    #    corpus joins onto the deduped pairs, and the dot runs once
-    #    per distinct pair (same folds as cosine(); bit-identical,
-    #    see blocked_similarity_join).
-    # Measured at sf1: 411s (round-12 form) -> 181s (per-row prep)
-    # -> 75s (this form); +0.5s at sf0.1 where the distinct exchange
-    # exceeds the saved dots (accepted -- the lane exists for scale).
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
-    prep = emb.select(
-        "vec_id", as_double_array(vec_col).alias("vd")
-    ).withColumn("nrm", l2_norm(F.col("vd")))
-    pa = prep.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("vd").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    pb = prep.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("vd").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")
-        ),
-        4,
-    )
-    return (
-        cand.join(pa, "vec_a")
-        .join(pb, "vec_b")
-        .select("vec_a", "vec_b", sim.alias("sim"))
-        .filter(F.col("sim") >= threshold)
-    )
+    ).select("vec_id", "band", "band_val")
+    return score_pairs(bucket_pairs(bands), emb, threshold, vec_col)
 
 
 def hard_negatives_exact(

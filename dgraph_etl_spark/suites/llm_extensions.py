@@ -1851,28 +1851,18 @@ def c30_source_overlap(spark, sf_dir):
     corpus. Distinct (source, span-hash) first (collapses each
     source's repeats), then per-hash ordered source pairs; the
     quadratic step is per-span-hash across sources (bounded by the
-    number of sources, not documents).
-
-    r12 shape: the self-join was replaced by a per-hash sorted
-    source-set collect + in-row ordered-pair explode
-    (dedup.ordered_pairs) -- the pair set is identical (sort_array's
-    UTF8-binary order is the same comparator as the old join's
-    ``a.source < b.source``), but the span relation is consumed ONCE
-    in a linear pipeline: no localCheckpoint materialization pass, no
-    join, and the only exchanges are the h repartition and the tiny
-    S^2-row pair rollup (plan diff: 3 Exchange + BHJ + 2 scans ->
-    2 Exchange, no join, 1 scan)."""
+    number of sources, not documents), so the source pairs come from
+    the in-row generator (dedup.bucket_ordered_pairs; sort_array's
+    UTF8-binary order is the oracle's ``a.source < b.source``): the
+    span relation is consumed once, with no join. Exact counts over
+    every source pair sharing a span, so the oracle is hash-exact."""
     docs = _docs(spark, sf_dir)
-    from ..functions.dedup import ordered_pairs
+    from ..functions.dedup import bucket_ordered_pairs
     from ..functions.text import source_span_sets
 
     sh = source_span_sets(docs, h_partitioned=True)
-    buckets = sh.groupBy("h").agg(
-        F.sort_array(F.collect_list("source")).alias("ss")
-    )
     return (
-        buckets.filter(F.size("ss") >= 2)
-        .select(F.explode(ordered_pairs(F.col("ss"))).alias("p"))
+        bucket_ordered_pairs(sh, ["h"], "source")
         .groupBy(
             F.col("p._1").alias("source_a"),
             F.col("p._2").alias("source_b"),

@@ -380,6 +380,55 @@ def test_c20_srp_lsh_precision_and_recall(spark):
     assert recall_p >= 0.9, f"portable recall {recall_p:.3f} below floor"
 
 
+def test_srp_neardup_pairs_exact_output(spark):
+    """The Gaussian srp_neardup_pairs returns EXACTLY the pairs that
+    share a band value of srp_signatures and whose brute-force
+    round(cosine(), 4) clears the threshold, with that sim, each pair
+    once -- the rows-only lane's full contract, not just a recall
+    floor."""
+    from pyspark.sql import functions as F
+
+    from dgraph_etl_spark.catalog import load_table
+    from dgraph_etl_spark.functions.similarity import (
+        as_double_array,
+        cosine,
+        srp_neardup_pairs,
+        srp_signatures,
+    )
+
+    n_planes, n_bands, threshold = 16, 8, 0.4
+    bits = n_planes // n_bands
+    emb = load_table(spark, SF_ORACLE, "embeddings")
+    bands = {
+        r.vec_id: {
+            (b, (r.srp_sig >> (b * bits)) & ((1 << bits) - 1))
+            for b in range(n_bands)
+        }
+        for r in srp_signatures(emb, n_planes=n_planes, seed=7).collect()
+    }
+    a = emb.select(
+        F.col("vec_id").alias("vec_a"), as_double_array("embedding").alias("va")
+    )
+    b = emb.select(
+        F.col("vec_id").alias("vec_b"), as_double_array("embedding").alias("vb")
+    )
+    brute = a.crossJoin(b).filter(F.col("vec_a") < F.col("vec_b")).select(
+        "vec_a", "vec_b", F.round(cosine(F.col("va"), F.col("vb")), 4).alias("sim")
+    )
+    want = {
+        (r.vec_a, r.vec_b): r.sim
+        for r in brute.filter(F.col("sim") >= threshold).collect()
+        if bands[r.vec_a] & bands[r.vec_b]
+    }
+    rows = srp_neardup_pairs(
+        emb, threshold=threshold, n_planes=n_planes, n_bands=n_bands, seed=7
+    ).collect()
+    got = {(r.vec_a, r.vec_b): r.sim for r in rows}
+    assert want, "no banded pair clears the threshold -- test is vacuous"
+    assert len(rows) == len(got), "a (vec_a, vec_b) pair appears twice"
+    assert got == want
+
+
 def test_srp_broadcast_signature_equals_literal_form(spark):
     """The broadcast-planes SRP signature (plan size independent of
     dim, no driver action when dim is passed) must produce bit-for-bit
@@ -1376,13 +1425,20 @@ def test_srp_rejects_nondivisible_bands(spark):
         srp_neardup_pairs,
     )
 
-    emb = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "vec_id bigint, embedding array<double>"
-    )
-    with _pytest.raises(ValueError, match="not divisible"):
-        srp_neardup_pairs(emb, n_planes=16, n_bands=3)
-    with _pytest.raises(ValueError, match="not divisible"):
-        srp_bands_fixedpoint(emb, n_planes=32, n_bands=5)
+    schema = "vec_id bigint, embedding array<double>"
+    one = spark.createDataFrame([(0, [1.0, 0.0])], schema)
+    # an empty frame: without dim there is no row to read it from, so
+    # a divisible banding must refuse by naming dim, not crash on None
+    empty = spark.createDataFrame([], schema)
+    for emb in (one, empty):
+        with _pytest.raises(ValueError, match="not divisible"):
+            srp_neardup_pairs(emb, n_planes=16, n_bands=3)
+        with _pytest.raises(ValueError, match="not divisible"):
+            srp_bands_fixedpoint(emb, n_planes=32, n_bands=5)
+    with _pytest.raises(ValueError, match="dim"):
+        srp_neardup_pairs(empty, n_planes=16, n_bands=2)
+    with _pytest.raises(ValueError, match="dim"):
+        srp_bands_fixedpoint(empty, n_planes=32, n_bands=4)
 
 
 def test_g04_hop_counts_rejects_k0(spark):
